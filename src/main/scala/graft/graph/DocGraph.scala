@@ -56,7 +56,10 @@ final case class DocGraph(docs: DataFrame, edges: DataFrame,
       .select(col("src").as("title"), col("dst").as("org"))
 
   /** J5 alias expansion of a seed keyword: the seed plus its ALIAS_OF
-    * target (`neo4j_query_executor.py:269-278`).
+    * target (`neo4j_query_executor.py:269-278`). Rows may repeat (the
+    * seed is usually its own representative): callers take it as the
+    * right side of a semi-join, which a duplicate cannot change, so no
+    * distinct shuffle is paid here.
     */
   def aliasExpand(seed: String): DataFrame = {
     val s = docs.sparkSession
@@ -64,7 +67,6 @@ final case class DocGraph(docs: DataFrame, edges: DataFrame,
     kwMapping.filter(col("original") === seed)
       .select(col("representative").as("kw"))
       .union(Seq(seed).toDF("kw"))
-      .distinct()
   }
 }
 
@@ -136,8 +138,12 @@ object DocGraph {
     * remaining single bucketed scan's HashPartitioning survives the
     * (alias-aware) projection into the join — the 2-hop self-join plans
     * with ZERO shuffle exchange under the join (asserted in
-    * `BucketedDocGraphSpec`). The alias mapping stays an in-memory frame:
-    * it is the broadcast side everywhere it appears.
+    * `BucketedDocGraphSpec`). The alias mapping is stored too, as one more
+    * table bucketed on `original` (the key family 6/10's seed filter
+    * tests), so the binding is self-contained: a served request reads
+    * only catalog tables, never re-deriving the mapping from the source
+    * data (an explode, distinct and window over every document — for an
+    * ingested graph, a re-parse of the whole tagged export).
     *
     * At 100 TB this is the difference between every co-author /
     * co-occurrence / collaborator query paying a full edge shuffle and
@@ -157,7 +163,7 @@ object DocGraph {
       s"DocGraph.bucketed: edge rel_type(s) ${unknown.mkString(", ")} have " +
         s"no bucket key in RelJoinKeys — add them or they would be " +
         s"dropped from the bucketed binding")
-    // The seven table writes are independent of each other — submit them
+    // The eight table writes are independent of each other — submit them
     // CONCURRENTLY from a bounded driver pool (guide §2.6 "overlap
     // independent jobs", the GraphDump discipline): sequentially each
     // small write left the executors ~idle between tiny stages, and the
@@ -180,6 +186,9 @@ object DocGraph {
         } :+ Future {
           BucketedStore.writeBucketed(g.docs, s"${prefix}_docs", "title",
             buckets)
+        } :+ Future {
+          BucketedStore.writeBucketed(g.kwMapping, s"${prefix}_kw_mapping",
+            "original", buckets)
         }
         val settled = Await.result(
           Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
@@ -188,19 +197,20 @@ object DocGraph {
           .foreach(throw _)
       } finally pool.shutdown()
     }
-    readBucketedBinding(s, prefix, g.kwMapping)
+    readBucketedBinding(s, prefix)
   }
 
   /** Reassemble a [[bucketed]] binding from its catalog tables WITHOUT
-    * writing anything — the serve-side read path on its own.
+    * writing anything — the serve-side read path on its own. Every frame
+    * of the result, the alias mapping included, is a catalog table read.
     */
-  def readBucketedBinding(s: SparkSession, prefix: String,
-                          kwMapping: DataFrame): DocGraph = {
+  def readBucketedBinding(s: SparkSession, prefix: String): DocGraph = {
     val edges = RelJoinKeys.map { case (rel, _) =>
       BucketedStore.table(s, s"${prefix}_${rel.toLowerCase}")
         .select(col("src"), col("dst"), lit(rel).as("rel_type"))
     }.reduce(_ unionAll _)
-    DocGraph(BucketedStore.table(s, s"${prefix}_docs"), edges, kwMapping)
+    DocGraph(BucketedStore.table(s, s"${prefix}_docs"), edges,
+      BucketedStore.table(s, s"${prefix}_kw_mapping"))
   }
 
   /** Tracks which source dir each served prefix's tables were built from
@@ -224,7 +234,6 @@ object DocGraph {
     */
   def bucketedServed(s: SparkSession, d: String, prefix: String,
                      buckets: Int = 16): DocGraph = {
-    val proto = synthetic(s, d)
     // Record the source dir only AFTER the build succeeds: a put-before-
     // build would let a partial build (exception after some per-rel table
     // writes) or a concurrent caller arriving mid-build observe prev == d
@@ -234,14 +243,11 @@ object DocGraph {
     // until the tables exist, and a build that throws leaves the mapping
     // UNCHANGED (ConcurrentHashMap.compute's contract), so the next
     // caller rebuilds from scratch instead of serving the partial write.
-    if (servedFrom.get(prefix) == d)
-      readBucketedBinding(s, prefix, proto.kwMapping)
-    else {
+    if (servedFrom.get(prefix) != d)
       servedFrom.compute(prefix, (_, prev) => {
-        if (prev != d) bucketed(proto, prefix, buckets)
+        if (prev != d) bucketed(synthetic(s, d), prefix, buckets)
         d
       })
-      readBucketedBinding(s, prefix, proto.kwMapping)
-    }
+    readBucketedBinding(s, prefix)
   }
 }

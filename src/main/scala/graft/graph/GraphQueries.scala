@@ -77,7 +77,7 @@ object GraphQueries {
   /** Family 6 (J4+J5): Keyword -> Document, alias-expanded (prompt rule 1). */
   def keywordDocs(g: DocGraph, keyword: String): DataFrame =
     g.hasKeyword
-      .join(broadcast(g.aliasExpand(keyword)), "kw")
+      .join(broadcast(g.aliasExpand(keyword)), Seq("kw"), "left_semi")
       .select(col("title")).distinct().orderBy(col("title"))
 
   def keywordDocs(s: SparkSession, d: String, keyword: String): DataFrame =
@@ -106,7 +106,7 @@ object GraphQueries {
     */
   def keywordPerYear(g: DocGraph, keyword: String): DataFrame =
     g.hasKeyword
-      .join(broadcast(g.aliasExpand(keyword)), "kw")
+      .join(broadcast(g.aliasExpand(keyword)), Seq("kw"), "left_semi")
       .select(col("title")).distinct()
       .join(g.docs.select(col("title"), col("year")), "title")
       .groupBy(col("year")).agg(count(lit(1)).as("n_docs"))
@@ -209,15 +209,15 @@ object GraphQueries {
     * 64-bit collision would merge two authors — probability ~n²/2⁶⁵,
     * ~3e-7 even at 10M distinct authors.
     *
-    * The `authored` frame is persisted across its three uses (both sides
-    * of the co-author self-join + the name-back dictionary) and across
-    * GraphX's several materializations of its input RDDs.
+    * Nothing is persisted and no job runs beyond `bfsReach`'s own: the
+    * returned frame is lazy, so the caller's one collect materializes it
+    * and a long-lived serve JVM keeps no cached frame per `hops=` request.
     */
   def coauthorReach(g: DocGraph, seed: String, maxHops: Int): DataFrame = {
     val s = g.docs.sparkSession
     import s.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val au = g.authored.persist(StorageLevel.MEMORY_AND_DISK)
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val au = g.authored
     val a = au.as("a")
     val b = au.as("b")
     val coEdges = a
@@ -226,17 +226,14 @@ object GraphQueries {
       .distinct()
     val ids = au.select($"author").distinct()
       .select($"author", xxhash64($"author").as("vec_id"))
-    // one-row local job — the hash of the seed literal, not a corpus scan
-    val seedId = s.range(1).select(xxhash64(lit(seed))).as[Long].head()
-    val out = graft.resolve.EntityResolution
+    // the seed's id on the driver: the very expression `xxhash64` plans
+    // (seed 42), evaluated on the literal — bit-identical, and no job
+    val seedId = XxHash64(Seq(Literal(seed)), 42L).eval().asInstanceOf[Long]
+    graft.resolve.EntityResolution
       .bfsReach(s, ids.select($"vec_id"), coEdges, seedId, maxHops)
       .join(ids, "vec_id")
       .select($"author", $"hops")
       .orderBy($"author")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize while au is cached, then release it
-    au.unpersist(blocking = false)
-    out
   }
 
   def coauthorReach(s: SparkSession, d: String, seed: String,
@@ -392,8 +389,9 @@ object GraphQueries {
 
     // L2 lazy-fallback CONTROL FLOW end-to-end (`neo4j_query_executor
     // .py:340-344`): family 6 is routed for a keyword with no node, the
-    // isEmpty probe finds the primary empty, and the row's lineage runs
-    // through Router.withFallback onto the full-text fallback — unlike
+    // router's one-row probe finds the primary empty, and the row's
+    // lineage runs through Router.withFallback (the same decision the
+    // answer path takes) onto the full-text fallback — unlike
     // q78, which gates fallbackSearch directly. The oracle mirrors the
     // branch with a NOT EXISTS guard on the primary, so fixture drift
     // that made the primary non-empty would fail the gate loudly.

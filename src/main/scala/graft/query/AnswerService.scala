@@ -54,8 +54,10 @@ object AnswerService {
     * reference does, plan, route WITH the L2 fallback (search terms
     * harvested from the planned params — the reference harvests them from
     * the same LLM output), render at most `maxRows` JSON rows into the
-    * answer text. Empty result → the reference's no-data phrasing stays
-    * caller-visible rather than an empty string.
+    * answer text. Each plan the request reads (the primary, and the
+    * fallback only when the primary is empty) is evaluated by exactly one
+    * collect capped at `maxRows + 1` rows. Empty result → the reference's
+    * no-data phrasing stays caller-visible rather than an empty string.
     *
     * CONCURRENCY CONTRACT — single serving thread, stated here at the
     * entry point (not only in the EntityResolution scaladoc): the
@@ -81,9 +83,11 @@ object AnswerService {
     val terms = params.get("terms")
       .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(params.valuesIterator.toSeq.sorted)
-    val df = Router.withFallback(g, family, params, terms)
-    val rendered =
-      try QueryText.renderRows(df).limit(maxRows + 1).collect()
+    // the cap sits below the rendering and so below the template's sort;
+    // the one row past maxRows detects truncation
+    val (_, rendered) =
+      try Router.firstNonEmpty(g, family, params, terms)(df =>
+        QueryText.renderRows(df.limit(maxRows + 1)).collect())
       // reap request-scoped serve caches once the result is materialized
       // (EntityResolution.releaseServeCaches's contract): the request
       // loop is the one place that knows materialization happened, so a

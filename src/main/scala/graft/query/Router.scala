@@ -86,22 +86,38 @@ object Router {
   /** L2: the fallback path — graph query returned empty → full-text
     * search over abstracts/topics/addresses with the harvested terms
     * (`neo4j_query_executor.py:340-344` lazy-fallback control flow).
+    *
+    * The empty→fallback decision lives here and only here. `run`
+    * evaluates a plan to rows; it is applied to the primary plan, and to
+    * the fallback plan only when the primary's rows come back empty.
+    * Returns the plan whose rows were kept, with those rows. The caller
+    * chooses what one evaluation costs: the answer path runs one capped
+    * collect (`limit(n)` below the rendering, so a sorted template plans
+    * a top-n `TakeOrderedAndProject` instead of a full sort), so each
+    * plan a request reads is executed once and nothing is materialized
+    * outside that collect.
+    */
+  def firstNonEmpty[A](g: DocGraph, family: Int,
+                       params: Map[String, String],
+                       searchTerms: Seq[String])(
+                       run: DataFrame => Array[A]): (DataFrame, Array[A]) = {
+    val primary = route(g, family, params)
+    val rows = run(primary)
+    if (rows.nonEmpty) (primary, rows)
+    else {
+      val fallback = GraphQueries.fallbackSearch(g, searchTerms, 100)
+      (fallback, run(fallback))
+    }
+  }
+
+  /** [[firstNonEmpty]] for callers that want the chosen plan itself: the
+    * decision probes one row of the primary plan, and the returned frame
+    * is the unexecuted plan (a consumer re-runs it).
     */
   def withFallback(g: DocGraph, family: Int,
                    params: Map[String, String],
-                   searchTerms: Seq[String]): DataFrame = {
-    // localCheckpoint executes the primary plan EXACTLY ONCE and returns a
-    // frame backed by the materialized blocks — the isEmpty probe and the
-    // consumer both read those blocks, so the expensive multi-hop plan is
-    // neither leaked as a lingering cache nor executed twice. (Blocks are
-    // executor-local, not fault-tolerant — fine for a driver-side
-    // control-flow probe whose result is consumed immediately. Lifetime:
-    // once the returned frame is unreferenced, ContextCleaner reclaims
-    // the checkpoint blocks at the next driver GC — bounded, not leaked.)
-    val primary = route(g, family, params).localCheckpoint()
-    if (!primary.isEmpty) primary
-    else GraphQueries.fallbackSearch(g, searchTerms, 100)
-  }
+                   searchTerms: Seq[String]): DataFrame =
+    firstNonEmpty(g, family, params, searchTerms)(_.limit(1).collect())._1
 
   def withFallback(s: SparkSession, sfDir: String, family: Int,
                    params: Map[String, String],

@@ -788,7 +788,9 @@ object EntityResolution {
     val out = bfs.vertices.filter(_._2 != Int.MaxValue)
       .map { case (id, hops) => (id, hops.toLong) }
       .toDF("vec_id", "hops")
-    out.persist(StorageLevel.MEMORY_AND_DISK)
+    // request-scoped: the caller's collect reads these blocks, and the
+    // serve loop's releaseServeCaches reaps them afterwards
+    persistServe(out)
     out.count() // materialize once, then release the graph's caches
     bfs.unpersist(blocking = false)
     graph.unpersist(blocking = false)

@@ -322,8 +322,7 @@ object ExactlyOnceSink {
       landBatch(reassign, 0L, dir)
       landBatch(reassign, 0L, dir) // at-least-once replay
       foldIntoBucketed(s, dir, "graft_q147_published_by", "src", 16)
-      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q147",
-        graft.graph.DocGraph.synthetic(s, d).kwMapping)
+      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q147")
       graft.query.Router.route(g, 7, Map("org" -> "Org_77"))
     }),
 
@@ -360,8 +359,7 @@ object ExactlyOnceSink {
       BucketedStore.compactMor(s, table, "src", Seq("src"))
       land() // replay after the fold...
       BucketedStore.compactMor(s, table, "src", Seq("src")) // ...re-fold
-      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q168",
-        graft.graph.DocGraph.synthetic(s, d).kwMapping)
+      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q168")
       graft.query.Router.route(g, 7, Map("org" -> "Org_77"))
     })
   )

@@ -75,25 +75,24 @@ class ServeCacheReleaseSpec extends AnyFunSuite {
   }
 
   test("AnswerService.answer releases serve caches after materialization") {
-    // the request-loop wiring itself: route one answer over the serve
-    // graph, then check the registry without calling release manually
+    // the request-loop wiring itself: answer every family (13 both as the
+    // 2-hop template and with `hops=`) over the served binding, then check
+    // the registry and the SQL cache WITHOUT calling release manually — a
+    // serve JVM must not grow per distinct request
+    import graft.query.AnswerService.{AnswerRequest, answer}
+    import graft.query.AnswerServiceSpec.{EveryFamily, FallbackRequest}
+    val g = graft.graph.DocGraph.bucketedServed(spark, TestSpark.TinySf,
+      "serve_cache_spec", 4)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    val res = graft.SparkEntry.queries("q142_answer_served")(
-      spark, TestSpark.TinySf)
-    assert(res.collect().nonEmpty)
-    // q142's query entry calls AnswerService.answer internally (whose
-    // finally-block releases); any frames persisted by the routed plan
-    // via persistServe must already be gone
-    val leftover = spark.sparkContext.getPersistentRDDs.values
-      .filterNot(_.name == null)
-    // the answer path itself persists nothing outside persistServe; the
-    // registry may still hold the standing build's frames only if a
-    // build ran in THIS call — release once more to cover that and
-    // assert empty (idempotent: release of an empty queue is a no-op)
-    EntityResolution.releaseServeCaches()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      s"q142 answer serve left persisted RDDs: $leftover")
+    (EveryFamily :+ FallbackRequest).foreach { q =>
+      assert(answer(g, AnswerRequest(q)).rows > 0, s"'$q' answered no rows")
+    }
+    val left = spark.sparkContext.getPersistentRDDs
+    assert(left.isEmpty, "answers left persisted RDD(s): " +
+      left.values.map(_.toString).mkString("; "))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "answers left entries in the SQL cache")
   }
 }
